@@ -294,11 +294,7 @@ object Programs {
     * still on disk: Spark replays at most the last uncommitted batch. */
   private def latestVersion(storeDir: String, name: String,
       upTo: Long = Long.MaxValue): String = {
-    val versions = graft.sources.Fs.listDirNames(storeDir)
-      .filter(n => n.startsWith(s"${name}_v") &&
-        graft.sources.Fs.exists(s"$storeDir/$n/_SUCCESS"))
-      .map(_.stripPrefix(s"${name}_v").toLong)
-      .filter(_ <= upTo)
+    val versions = storeVersions(storeDir, name, Some("_SUCCESS")).filter(_ <= upTo)
     require(versions.nonEmpty,
       s"store $storeDir has no complete $name version <= $upTo. A stream " +
         "must either RESUME its own checkpoint (batch ids continue where " +
@@ -318,14 +314,19 @@ object Programs {
     * incomplete (markerless) versions are never the retained set and
     * get reclaimed too. */
   private def pruneVersions(storeDir: String, name: String): Unit = {
-    val all = graft.sources.Fs.listDirNames(storeDir)
-      .filter(_.startsWith(s"${name}_v"))
-    val complete = all
-      .filter(n => graft.sources.Fs.exists(s"$storeDir/$n/_SUCCESS"))
-      .sortBy(_.stripPrefix(s"${name}_v").toLong)
-    val keep = complete.takeRight(2).toSet
-    all.filterNot(keep).foreach(n => graft.sources.Fs.delete(s"$storeDir/$n"))
+    val keep = storeVersions(storeDir, name, Some("_SUCCESS")).sorted.takeRight(2).toSet
+    storeVersions(storeDir, name, None).filterNot(keep)
+      .foreach(v => graft.sources.Fs.delete(s"$storeDir/${name}_v$v"))
   }
+
+  /** The `N` of every `<name>_vN` directory under `storeDir`; with a
+    * `marker`, only the complete versions that carry it. */
+  private def storeVersions(storeDir: String, name: String,
+      marker: Option[String]): Seq[Long] =
+    graft.sources.Fs.listDirNames(storeDir)
+      .filter(n => n.startsWith(s"${name}_v") &&
+        marker.forall(m => graft.sources.Fs.exists(s"$storeDir/$n/$m")))
+      .map(_.stripPrefix(s"${name}_v").toLong)
 
   /** ONLINE ingest with CLOSED maintenance loop (r14) — the streaming
     * program that folds what it admits back into the standing
@@ -699,13 +700,10 @@ object Programs {
     ()
   }
 
-  /** Complete (marker-carrying) versions of a phrase-store artifact. */
+  /** Complete versions of a phrase-store artifact (writePositionalIndex
+    * commits each with `_GRAFT_DONE`). */
   private def phraseVersions(storeDir: String, name: String): Seq[Long] =
-    graft.sources.Fs.listDirNames(storeDir)
-      .filter(_.startsWith(s"${name}_v"))
-      .map(_.stripPrefix(s"${name}_v").toLong)
-      .filter(v => graft.sources.Fs.exists(
-        s"$storeDir/${name}_v$v/_GRAFT_DONE"))
+    storeVersions(storeDir, name, Some("_GRAFT_DONE"))
 
   /** The phrase store's current view: the newest complete base UNION
     * every committed segment the base has not folded (`base_vN` folds

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Sampling, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Served, Tables}
 
 /** §2.d — LLM-training-data pipeline operators over the `documents`
   * corpus: dedup (exact / Jaccard / MinHash-LSH / SimHash / embedding
@@ -146,29 +146,9 @@ object QueriesLlm {
       .select(col("doc_id"), col("clean_text"), col("n_removed"), col("n_spans"))
   }
 
-  /** Build-once gate for the bucketed gram index table. Table name keys
-    * on (applicationId, md5 of the RAW dir string) — concurrent harness
-    * runs must not race one warehouse table, and a sanitizing
-    * replaceAll would collide distinct corpora (the round-11 ADVICE on
-    * the round-11 user-stats store). Serialized per JVM for the same
-    * reason the stats build is. The DATA lives under the /tmp index
-    * root (external table, the servedIvfPqStore convention — the r12
-    * ADVICE: warehouse-homed data outlives the in-memory catalog entry
-    * and accumulates across harness runs; /tmp is tmp-cleaner
-    * reclaimed). Deployment points the path at the corpus store. */
-  private def servedGramIndexTable(s: SparkSession, dir: String): String = {
-    val key = servedKey(s, dir)
-    val table = s"graft_gram_idx_${key.replace('/', '_')}"
-    gramIndexBuildLock.synchronized {
-      if (!s.catalog.tableExists(table))
-        graft.sources.Sinks.saveBucketed(
-          Dedup.gramIndex(docs(s, dir).filter(col("doc_id") % 10 =!= 0), 10),
-          table, Seq("h1", "h2"), 32,
-          path = Some(s"/tmp/graft_gram_index/$key"))
-    }
-    table
-  }
-  private val gramIndexBuildLock = new Object
+  private def servedGramIndexTable(s: SparkSession, dir: String): String =
+    Served.bucketedTable(s, dir, "gram_index", Seq("h1", "h2"), 32)(
+      Dedup.gramIndex(ingestCorpus(s, dir), 10))
 
   /** The FOUR-GATE admission pipeline as one oracle-checked query (r13):
     * [[graft.Programs.ingestCore]] — Bloom exact-novelty gate → minhash
@@ -197,11 +177,11 @@ object QueriesLlm {
     * graph probing PERSISTED corpus artifacts — the bloom bit table
     * (KB parquet), the band index (bucketed on (band, bk)) and the
     * gram index (bucketed on (h1, h2), SHARED with
-    * q_dedup_substr_served — one build serves both, the
-    * servedIvfPqStore convention). The inline q_ingest_gates stays
-    * registered as the honest build+probe total; THIS is the query a
-    * standing corpus runs nightly, where every per-invocation cost is
-    * delta-sized and both index joins read pre-partitioned sides.
+    * q_dedup_substr_served — one build serves both). The inline
+    * q_ingest_gates stays registered as the honest build+probe total;
+    * THIS is the query a standing corpus runs nightly, where every
+    * per-invocation cost is delta-sized and both index joins read
+    * pre-partitioned sides.
     * Oracle: identical SQL to the inline form — parquet round-trips
     * the bit positions, band keys and digest lanes exactly, so
     * served ≡ inline is hash-checked, not assumed. */
@@ -343,41 +323,15 @@ object QueriesLlm {
     docs(s, dir).filter(col("doc_id") % 10 === 0).unionByName(redelivered)
   }
 
-  /** Build-once path for the persisted bloom bit table (KB-scale
-    * (j, pos) parquet; _SUCCESS is the build-complete marker). Keyed
-    * (applicationId, corpus md5) like every served artifact here. */
-  private def servedBloomBitsPath(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_bloom_bits/${servedKey(s, dir)}"
-    gramIndexBuildLock.synchronized {
-      if (!graft.sources.Fs.exists(s"$path/_SUCCESS"))
-        graft.operators.Freq.bloomBuild(
-            ingestCorpus(s, dir).select(md5(col("text")).as("item")),
-            k = 3, width = 1 << 20)
-          .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  /** The persisted bloom bit table (KB-scale (j, pos) parquet). */
+  private def servedBloomBitsPath(s: SparkSession, dir: String): String =
+    Served.store(s, dir, "bloom_bits")(graft.operators.Freq.bloomBuild(
+        ingestCorpus(s, dir).select(md5(col("text")).as("item")),
+        k = 3, width = 1 << 20).write.parquet(_))
 
-  /** Build-once gate for the bucketed minhash band index table —
-    * the servedGramIndexTable pattern on the (band, bk) lanes, so the
-    * probe join reads the index side with zero exchange. */
-  private def servedBandIndexTable(s: SparkSession, dir: String): String = {
-    val key = servedKey(s, dir)
-    val table = s"graft_band_idx_${key.replace('/', '_')}"
-    gramIndexBuildLock.synchronized {
-      if (!s.catalog.tableExists(table))
-        graft.sources.Sinks.saveBucketed(
-          Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4),
-          table, Seq("band", "bk"), 32,
-          path = Some(s"/tmp/graft_band_index/$key"))
-    }
-    table
-  }
-
-  /** The shared served-store key — one definition for every family
-    * (r16 review), see [[graft.sources.Sinks.servedKey]]. */
-  private def servedKey(s: SparkSession, dir: String): String =
-    graft.sources.Sinks.servedKey(s, dir)
+  private def servedBandIndexTable(s: SparkSession, dir: String): String =
+    Served.bucketedTable(s, dir, "band_index", Seq("band", "bk"), 32)(
+      Dedup.minhashBandIndex(ingestCorpus(s, dir), k = 3, perms = 8, bands = 4))
 
   /** DEDUP QUALITY evaluation (r12) — the q_sim_recall posture applied
     * to the near-dup family: pair-level recall AND precision of the
@@ -724,11 +678,9 @@ object QueriesLlm {
     * arithmetic, so the hash gate proves explode-join-aggregate and
     * embedded-table scoring equivalent end to end. */
   val textPerplexityServed: Q = (s, dir) => {
-    // build-once gate, keyed (applicationId, corpus) like the served
-    // gram index: deployment trains/persists the model beside the
-    // corpus and a serving job loads it ONCE at start — steady runs
-    // price scoring, the cold run prices train+load (the
-    // q_sim_ivfpq_served convention)
+    // deployment trains/persists the model beside the corpus and a
+    // serving job loads it ONCE at start — steady runs price scoring,
+    // the cold run prices train+load
     val (keys, cnts, tot, v) = lmModelCache.computeIfAbsent(
       s.sparkContext.applicationId + "|" + dir + "|" + corpusFingerprint(dir),
       _ => {
@@ -967,10 +919,7 @@ object QueriesLlm {
     * self-containment; floats/doubles round-trip parquet exactly, so the
     * scores are bit-identical to the inline formulation. */
   val simIvfProbe2: Q = (s, dir) => {
-    // the application id keys the path per run: two concurrent harness
-    // runs over the same sfDir must not race on one shared index dir
-    val idx = "/tmp/graft_ivf_index/" + s.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val idx = "/tmp/graft_ivf_index/" + Served.key(s, dir)
     operators.Ann.buildIndex(annCorpus(s, dir), idx)
     operators.Ann.searchIndex(s, idx, annQueries(s, dir), k = 10, nprobe = 2)
       .select(col("query_id"), col("cell"), col("corpus_id"), col("rnk"), col("score_q"))
@@ -1114,10 +1063,9 @@ object QueriesLlm {
   /** SERVING-shape IVF-PQ search (r10): query against the PERSISTED
     * composed index — the deployment path (a serving job never
     * retrains; q_sim_ivfpq stays registered as the honest end-to-end
-    * train+encode+serve cost). The q_bpe_tokenize_served pattern
-    * applied to ANN: both codebooks and the cell-partitioned codes
-    * round-trip parquet bit-exactly, so the top-k is identical to the
-    * inline composition and the SAME oracle adjudicates both. */
+    * train+encode+serve cost). Both codebooks and the cell-partitioned
+    * codes round-trip parquet bit-exactly, so the top-k is identical to
+    * the inline composition and the SAME oracle adjudicates both. */
   val simIvfPqServed: Q = (s, dir) =>
     operators.Ann.searchIvfPqIndex(s, servedIvfPqStore(s, dir),
         annQueries(s, dir), k = 5, nprobe = 2)
@@ -1143,45 +1091,25 @@ object QueriesLlm {
       .select(col("query_id"), col("cell"), col("corpus_id"), col("dist_q"),
         col("rnk").cast("long").as("rnk"))
 
-  /** Build-then-append gate for the incremental IVF-PQ store — the
-    * servedPosIncIndexPath convention: the build's own marker cannot
-    * gate the pair (it commits before the append lands), so the append
-    * is committed by `_GRAFT_INC_DONE` and the probe gates on THAT. */
-  private def servedIvfPqIncStore(s: SparkSession, dir: String): String = {
-    val store = "/tmp/graft_ivfpq_index_inc/" + servedKey(s, dir)
-    ivfPqIncBuildLock.synchronized {
-      if (!graft.sources.Fs.exists(store + "/_GRAFT_INC_DONE")) {
-        val e = Tables(s, dir).embeddings
-        operators.Ann.buildIvfPqIndex(
-          e.filter(col("vec_id") >= 5 && col("vec_id") % 10 =!= 0)
-            .select(col("vec_id").as("corpus_id"), col("embedding").as("ce")),
-          store, kCells = 4, iters = 2)
-        operators.Ann.appendIvfPqIndex(s, store,
-          e.filter(col("vec_id") >= 5 && col("vec_id") % 10 === 0)
-            .select(col("vec_id").as("corpus_id"), col("embedding").as("ce")))
-        graft.sources.Fs.writeString(store + "/_GRAFT_INC_DONE", "ok\n")
-      }
-    }
-    store
-  }
-  private val ivfPqIncBuildLock = new Object
-
-  /** Build-once path for the persisted IVF-PQ index — per-application
-    * (concurrent harness runs must not race on a shared index dir, the
-    * bpeTokenizeServed convention), shared by the served search and its
-    * recall row so one invocation's build serves both. */
-  private def servedIvfPqStore(s: SparkSession, dir: String): String = {
-    val store = "/tmp/graft_ivfpq_index/" + s.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    // coarse is written LAST by the builder, so its marker implies the
-    // codes and pq stores are complete (partitionBy leaves no _SUCCESS)
-    if (!graft.sources.Fs.exists(store + "/coarse/_SUCCESS"))
-      operators.Ann.buildIvfPqIndex(
-        Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
-          .select(col("vec_id").as("corpus_id"), col("embedding").as("ce")),
+  /** The base build and the delta append commit together: the
+    * lifecycle marker lands only after the append. */
+  private def servedIvfPqIncStore(s: SparkSession, dir: String): String =
+    Served.store(s, dir, "ivfpq_index_inc") { store =>
+      val corpus = Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("ce"))
+      operators.Ann.buildIvfPqIndex(corpus.filter(col("corpus_id") % 10 =!= 0),
         store, kCells = 4, iters = 2)
-    store
-  }
+      operators.Ann.appendIvfPqIndex(s, store,
+        corpus.filter(col("corpus_id") % 10 === 0))
+    }
+
+  /** Shared by the served search and its recall row, so one build
+    * serves both. */
+  private def servedIvfPqStore(s: SparkSession, dir: String): String =
+    Served.store(s, dir, "ivfpq_index")(operators.Ann.buildIvfPqIndex(
+      Tables(s, dir).embeddings.filter(col("vec_id") >= 5)
+        .select(col("vec_id").as("corpus_id"), col("embedding").as("ce")),
+      _, kCells = 4, iters = 2))
 
   /** Recall@5 of the PQ ADC rung against the exact top-5 (r12,
     * completing the quality ladder the r11 verdict left at the IVF
@@ -1292,23 +1220,9 @@ object QueriesLlm {
       operators.TextIndex.prunePositionalIndex(idx, phrase, buckets), phrase)
   }
 
-  /** Build-once gate for the partitioned positional index — the
-    * servedGramIndexTable convention (path keyed on (applicationId,
-    * md5(dir)); /tmp data; build serialized). The marker is
-    * writePositionalIndex's own `_GRAFT_DONE`: dynamic-partition
-    * commits leave no root `_SUCCESS` (measured r16 — the gate keyed
-    * on it rebuilt the index every steady run). */
-  private def servedPosIndexPath(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_pos_index/${servedKey(s, dir)}"
-    posIndexBuildLock.synchronized {
-      if (!graft.sources.Fs.exists(s"$path/_GRAFT_DONE"))
-        operators.TextIndex.writePositionalIndex(
-          operators.TextIndex.buildPositionalPostings(
-            docs(s, dir), "doc_id", "text"), path)
-    }
-    path
-  }
-  private val posIndexBuildLock = new Object
+  private def servedPosIndexPath(s: SparkSession, dir: String): String =
+    Served.store(s, dir, "pos_index")(operators.TextIndex.writePositionalIndex(
+      operators.TextIndex.buildPositionalPostings(docs(s, dir), "doc_id", "text"), _))
 
   /** INCREMENTAL form of [[textPhraseServed]] (r16): the standing
     * corpus (doc_id % 10 ≠ 0) persists its positional index ONCE; the
@@ -1329,28 +1243,18 @@ object QueriesLlm {
       operators.TextIndex.prunePositionalIndex(idx, phrase, buckets), phrase)
   }
 
-  /** Build-once gate for the build-then-append positional index — the
-    * servedPosIndexPath convention with a SECOND marker: the corpus
-    * build's own `_GRAFT_DONE` cannot gate the pair (it exists before
-    * the append lands, and a crash between the two would serve a
-    * corpus-only index as if complete), so the delta append is
-    * committed by `_GRAFT_INC_DONE` and the probe gates on THAT. */
-  private def servedPosIncIndexPath(s: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_pos_index_inc/${servedKey(s, dir)}"
-    posIndexBuildLock.synchronized {
-      if (!graft.sources.Fs.exists(s"$path/_GRAFT_INC_DONE")) {
-        val d = docs(s, dir)
-        operators.TextIndex.writePositionalIndex(
-          operators.TextIndex.buildPositionalPostings(
-            d.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"), path)
-        operators.TextIndex.appendPositionalIndex(
-          operators.TextIndex.buildPositionalPostings(
-            d.filter(col("doc_id") % 10 === 0), "doc_id", "text"), path)
-        graft.sources.Fs.writeString(s"$path/_GRAFT_INC_DONE", "ok\n")
-      }
+  /** The corpus build's own `_GRAFT_DONE` exists before the append
+    * lands, so only the lifecycle marker, written after the append,
+    * says the pair is complete. */
+  private def servedPosIncIndexPath(s: SparkSession, dir: String): String =
+    Served.store(s, dir, "pos_index_inc") { path =>
+      val TI = operators.TextIndex
+      val d = docs(s, dir)
+      TI.writePositionalIndex(TI.buildPositionalPostings(
+        d.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"), path)
+      TI.appendPositionalIndex(TI.buildPositionalPostings(
+        d.filter(col("doc_id") % 10 === 0), "doc_id", "text"), path)
     }
-    path
-  }
 
   /** Rarity-weighted OR search: top 20 docs by Σ tf·((N·10^6) DIV df) —
     * the IDF shape in exact BIGINT arithmetic, so the ranking (tie
@@ -1669,13 +1573,8 @@ object QueriesLlm {
     * bit-identical to the inline formulation — the same unrolled-chain
     * oracle adjudicates both. */
   val bpeTokenizeServed: Q = (s, dir) => {
-    // per-application path: concurrent harness runs must not race on a
-    // shared model dir (the simIvfProbe2 convention)
-    val store = "/tmp/graft_bpe_model/" + s.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (!graft.sources.Fs.exists(s"$store/_SUCCESS"))
-      operators.Tokenize.bpeMerges(docs(s, dir), nMerges = 8)
-        .write.mode("overwrite").parquet(store)
+    val store = Served.store(s, dir, "bpe_model")(
+      operators.Tokenize.bpeMerges(docs(s, dir), nMerges = 8).write.parquet(_))
     val model = s.read.parquet(store)
       .orderBy(col("merge_idx"))
       .collect().map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq

@@ -486,7 +486,7 @@ object Ann {
     // would survive and get served (and re-appended). Deleting the
     // whole store (markers included) also closes the crash window: a
     // rebuild that dies mid-write leaves no stale coarse/_SUCCESS or
-    // _GRAFT_INC_DONE claiming completeness.
+    // served-store marker claiming completeness.
     graft.sources.Fs.delete(dir)
     // the two trainings are independent and each is a chain of small
     // sequential jobs that leaves most cores idle — overlap them
@@ -503,7 +503,7 @@ object Ann {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
     pqCb.write.mode("overwrite").parquet(s"$dir/pq")
     // written LAST: a partitionBy write leaves no _SUCCESS marker, so
-    // coarse/_SUCCESS is the build-complete gate callers test
+    // coarse/_SUCCESS is the build-complete mark searchIvfPqIndex checks
     coarse.write.mode("overwrite").parquet(s"$dir/coarse")
   }
 

@@ -55,20 +55,6 @@ object Sinks {
   def saveBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     saveBucketed(df, table, Seq(key), buckets)
 
-  /** The (applicationId, corpus-dir md5) key every served artifact
-    * store uses — ONE definition (r16 review: three copies had grown
-    * across the query families, and a drift in the sanitize/keying
-    * rule would let two stores race or collide): concurrent harness
-    * runs must not race one store, and the dir component is an md5 of
-    * the RAW string because a sanitizing replaceAll would collide
-    * distinct corpora (/data/sf0.1 vs /data-sf0.1 — the round-11
-    * ADVICE). */
-  def servedKey(s: SparkSession, dir: String): String = {
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") + "/" + dirKey
-  }
-
   /** Multi-column bucket key (e.g. a band index on (band, bk)): a join
     * on exactly these columns reads the table pre-partitioned.
     *

@@ -86,19 +86,25 @@ object Tables {
   // before its first read); a path rewritten after first resolution
   // would serve a stale file listing, exactly as a catalog table
   // would.
-  private val catalog =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  //
+  // Every memoized DataFrame holds its session strongly, so a weak-keyed
+  // map would never drop an entry; sessions whose SparkContext has
+  // stopped are evicted instead, swept whenever a session resolves its
+  // first table.
+  private val catalog = scala.collection.mutable.HashMap.empty[SparkSession,
+    scala.collection.concurrent.TrieMap[String, DataFrame]]
 
   private def resolved(spark: SparkSession, path: String): DataFrame = {
     val m = catalog.synchronized {
-      var mm = catalog.get(spark)
-      if (mm == null) {
-        mm = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        catalog.put(spark, mm)
-      }
-      mm
+      catalog.getOrElse(spark, {
+        catalog.filterInPlace((s, _) => !s.sparkContext.isStopped)
+        catalog.getOrElseUpdate(spark, scala.collection.concurrent.TrieMap.empty)
+      })
     }
     m.getOrElseUpdate(path, spark.read.parquet(path))
   }
+
+  /** Sessions the memo currently holds. */
+  private[graft] def memoizedSessions: Seq[SparkSession] =
+    catalog.synchronized(catalog.keys.toSeq)
 }
